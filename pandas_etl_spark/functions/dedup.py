@@ -71,23 +71,6 @@ def char_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """(id, shingle) exploded distinct k-word shingles."""
-    toks = "filter(split(_norm, ' '), t -> t <> '')"
-    return (
-        ensure_parallelism(df.select(F.col(id_col).alias("id"), normalized(text_col).alias("_norm")))
-        .select(
-            "id",
-            F.explode(
-                F.expr(
-                    f"array_distinct(transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)), "
-                    f"i -> array_join(slice({toks}, i, {k}), ' ')))"
-                )
-            ).alias("shingle"),
-        )
-    )
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one representative (min id) per normalized-content hash.
     Single shuffle on the md5 hash; carries only (hash, id) through the

@@ -266,16 +266,6 @@ def read_pointer_payloads(
     return df.mapInPandas(batches, schema)
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled timestamp
-    (the decode itself is the stub above). Demonstrates the explode-based
-    fan-out that keeps sampling distributed and lazy."""
-    return df.withColumn(
-        "sample_ms",
-        F.explode(F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(every_ms))),
-    )
-
-
 def ahash_signatures(
     df: DataFrame,
     payload_col: str = "payload",

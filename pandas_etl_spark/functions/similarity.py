@@ -53,15 +53,6 @@ def cosine(a: Column, b: Column) -> Column:
 # call; the parser builds the identical left-associative tree.
 
 
-def _norm_sql(vec_col: str) -> str:
-    """SQL text of :func:`_norm`'s sequential fold — identical
-    arithmetic, parsed server-side."""
-    return (
-        f"SQRT(AGGREGATE(`{vec_col}`, CAST(0.0 AS DOUBLE), "
-        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
-
-
 def _flat_cols(vec_col: str, dim: int, prefix: str) -> list[str]:
     """selectExpr strings extracting ``dim`` elements as double
     columns (0-based ``arr[i]``, NULL past the end — ANSI off)."""

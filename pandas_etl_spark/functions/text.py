@@ -90,11 +90,6 @@ def quality_score(col: str | Column) -> Column:
     return (0.4 * len_score + 0.3 * punct_pen + 0.3 * stop_score).alias("quality")
 
 
-def lang_scores(col: str | Column) -> list[Column]:
-    """Per-language stopword-hit counts (the language-ID signal)."""
-    return [stopword_hits(col, lg).alias(f"hits_{lg}") for lg in sorted(LANG_STOPWORDS)]
-
-
 def lang_id(col: str | Column) -> Column:
     """Pick the language with the most stopword hits; deterministic
     alphabetical tie-break; 'und' (undetermined) when zero hits."""
@@ -178,20 +173,6 @@ def chunk_documents(
             "chunk_id",
             F.col(text_col).substr(F.col("start"), F.lit(chunk_size)).alias("chunk_text"),
         )
-    )
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard text-analysis columns to a documents frame."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        char_count(text_col).alias("n_chars_computed"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col).alias("stopword_ratio_en"),
-        quality_score(text_col).alias("quality"),
-        lang_id(text_col).alias("lang_pred"),
-        fingerprint(text_col).alias("fp"),
     )
 
 

@@ -20,8 +20,7 @@ step omits ``schema:`` — it runs the fn on a driver-side sample.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from typing import Any
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -38,16 +37,6 @@ def vectorized(return_type: str) -> Callable:
     return deco
 
 
-def map_frames(df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: str) -> DataFrame:
-    """DataFrame→DataFrame UDF over Arrow batches (mapInPandas)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield fn(pdf)
-
-    return df.mapInPandas(batches, schema)
-
-
 def apply_by_group(
     df: DataFrame,
     keys: list[str] | str,
@@ -59,16 +48,6 @@ def apply_by_group(
     cardinality (and no single giant group) at scale."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     return df.groupBy(*keys).applyInPandas(fn, schema)
-
-
-def grouped_agg(return_type: str) -> Callable:
-    """Decorator: ``pd.Series -> scalar`` reduction → GROUPED_AGG pandas
-    UDF usable inside ``groupBy().agg(...)`` and windows."""
-
-    def deco(fn: Callable[..., Any]):
-        return F.pandas_udf(fn, returnType=return_type, functionType=F.PandasUDFType.GROUPED_AGG)
-
-    return deco
 
 
 def infer_schema_from_sample(

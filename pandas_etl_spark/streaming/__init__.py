@@ -1,14 +1,32 @@
 """Structured Streaming surface (SURVEY §2.9, north-star — the reference
 is strictly batch: one-shot scheduler at /root/reference/pandas_etl/etl.py:572-617).
 
-Helpers to run file-backed streams of the ``events`` table synchronously
-(memory sink + processAllAvailable) so streaming operators are testable
-and oracle-comparable against their batch equivalents.
+Two synchronous runners make streaming operators testable and
+oracle-comparable against their batch equivalents:
+
+- :func:`run_stream_to_table` drains a streaming frame (typically a
+  file stream of a test table, :func:`read_table_stream`) into an
+  in-memory table — the path for stateful operators (windows,
+  watermarks, stream joins, applyInPandasWithState) whose result IS the
+  sink table.
+- :func:`replay_microbatches` replays a list of batch frames as one
+  file-stream micro-batch each, in order, into a ``foreachBatch`` sink
+  under a private temp dir that is removed on exit, failure included.
+  The catalog's streaming queries (``catalog/streaming.py``) drive the
+  incremental sinks below (``dedup_ingest_sink``,
+  ``span_dedup_ingest_sink``, ``cdc_apply_sink``, ``hll_ingest_sink``,
+  ``mv_maintain_sink``, ``quality_gate_sink``, and
+  ``operators.checksum.manifest_ingest_sink``) through it and compare
+  the sink state after the replay with a one-shot batch computation.
+
+The remaining functions are those ``foreachBatch`` sinks and the
+versioned-snapshot (``v{n}``) read/vacuum helpers they share.
 """
 
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -58,6 +76,105 @@ def run_stream_to_table(
     finally:
         q.stop()
     return table
+
+
+@contextmanager
+def replay_microbatches(spark: SparkSession, batches: list[DataFrame], make_sink):
+    """Replay ``batches`` as a file stream, one micro-batch per frame in
+    list order, into ``foreachBatch(make_sink(tmp))``; yields ``tmp``.
+
+    ``tmp`` is a fresh temp dir: each frame lands as one parquet dir
+    under ``tmp/src`` with strictly increasing mtimes (file-stream batch
+    order follows modification time), the stream checkpoints under
+    ``tmp/ckpt``, and ``make_sink`` puts its own stores under ``tmp``.
+    The stream is drained (processAllAvailable) and stopped before the
+    ``with`` body runs, so the body reads the sink's stores back — and
+    must materialize what it returns, because ``tmp`` is removed when
+    the block exits, on failure too. Frames share the first one's
+    schema.
+
+    Usage::
+
+        with replay_microbatches(spark, [b0, b1], lambda tmp:
+                                 dedup_ingest_sink(f"{tmp}/corpus")) as tmp:
+            kept = spark.read.parquet(f"{tmp}/corpus").count()
+    """
+    import os
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="replay_microbatches_")
+    try:
+        src = os.path.join(tmp, "src")
+        mtime0 = 1_700_000_000
+        for i, frame in enumerate(batches):
+            d = os.path.join(src, f"b{i}")
+            frame.coalesce(1).write.parquet(d)
+            t = mtime0 + 100 * i
+            for f in os.listdir(d):
+                os.utime(os.path.join(d, f), (t, t))
+        stream = (
+            spark.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .option("pathGlobFilter", "*.parquet")
+            .format("parquet")
+            .load(src)
+        )
+        q = (
+            stream.writeStream.outputMode("append")
+            .foreachBatch(make_sink(tmp))
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """The replay-safe append of the ``foreachBatch`` sinks: ``df`` lands
+    as the ``__batch=<batch_id>`` partition of ``path`` under dynamic
+    partition overwrite, so a checkpoint replay of the batch overwrites
+    its own partition instead of duplicating it."""
+    from pyspark.sql import functions as F
+
+    (
+        df.withColumn("__batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .partitionBy("__batch")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+def snapshot_versions(snapshot_path: str) -> list[int]:
+    """Ascending version numbers of the ``v{n}`` directories under
+    ``snapshot_path`` (the versioned-snapshot convention of
+    :func:`cdc_apply_sink`); empty when the directory is absent."""
+    import os
+
+    if not os.path.isdir(snapshot_path):
+        return []
+    return sorted(
+        int(d[1:]) for d in os.listdir(snapshot_path)
+        if d.startswith("v") and d[1:].isdigit()
+    )
+
+
+def _latest_snapshot(spark, snapshot_path: str) -> tuple[int, DataFrame | None]:
+    """(newest version, its frame) under the ``v{n}`` convention, or
+    (-1, None) before the first version lands."""
+    import os
+
+    vs = snapshot_versions(snapshot_path)
+    if not vs:
+        return -1, None
+    return vs[-1], spark.read.parquet(os.path.join(snapshot_path, f"v{vs[-1]}"))
 
 
 def dedup_ingest_sink(
@@ -113,15 +230,6 @@ def dedup_ingest_sink(
 
     idx = corpus_path.rstrip("/") + ".dedup_index"
 
-    def _write_corpus(novel: DataFrame, batch_id: int) -> None:
-        (
-            novel.withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(corpus_path)
-        )
-
     def _append_index(spark, batch_id: int) -> None:
         """Index the just-written partition (post-materialization read —
         append_to_dedup_index's materialize-first rule)."""
@@ -148,23 +256,16 @@ def dedup_ingest_sink(
         sh = char_shingles(written, text_col, id_col, k).join(
             stop, "shingle", "left_anti"
         )
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (
-            sh.withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite").partitionBy("__batch").options(**dyn)
-            .parquet(os.path.join(idx, "postings"))
+        write_batch_partition(sh, batch_id, os.path.join(idx, "postings"))
+        write_batch_partition(
+            sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_b")),
+            batch_id,
+            os.path.join(idx, "sizes"),
         )
-        (
-            sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_b"))
-            .withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite").partitionBy("__batch").options(**dyn)
-            .parquet(os.path.join(idx, "sizes"))
-        )
-        (
-            written.select(fingerprint(text_col).alias("fp")).distinct()
-            .withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite").partitionBy("__batch").options(**dyn)
-            .parquet(os.path.join(idx, "fp"))
+        write_batch_partition(
+            written.select(fingerprint(text_col).alias("fp")).distinct(),
+            batch_id,
+            os.path.join(idx, "fp"),
         )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -191,7 +292,7 @@ def dedup_ingest_sink(
                 )
             else:
                 novel = batch_df
-            _write_corpus(novel, batch_id)
+            write_batch_partition(novel, batch_id, corpus_path)
             _append_index(spark, batch_id)
             return
         try:
@@ -218,7 +319,7 @@ def dedup_ingest_sink(
             )
         else:
             novel = batch_df
-        _write_corpus(novel, batch_id)
+        write_batch_partition(novel, batch_id, corpus_path)
 
     return sink
 
@@ -246,22 +347,10 @@ def cdc_apply_sink(
 
     from pandas_etl_spark.operators.upsert import cdc_apply
 
-    def _latest_version(spark) -> tuple[int, DataFrame]:
-        if not os.path.isdir(snapshot_path):
-            return -1, base
-        vs = sorted(
-            int(d[1:]) for d in os.listdir(snapshot_path)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        if not vs:
-            return -1, base
-        return vs[-1], spark.read.parquet(
-            os.path.join(snapshot_path, f"v{vs[-1]}")
-        )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ver, snap = _latest_version(spark)
+        ver, snap = _latest_snapshot(batch_df.sparkSession, snapshot_path)
+        if snap is None:
+            snap = base
         out = cdc_apply(snap, batch_df, keys, seq_cols, op_col, delete_op)
         out.write.mode("overwrite").parquet(
             os.path.join(snapshot_path, f"v{ver + 1}")
@@ -294,22 +383,8 @@ def hll_ingest_sink(
 
     from pandas_etl_spark.operators.sketches import hll_append, hll_rollup
 
-    def _latest(spark):
-        if not os.path.isdir(rollup_path):
-            return -1, None
-        vs = sorted(
-            int(d[1:]) for d in os.listdir(rollup_path)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        if not vs:
-            return -1, None
-        return vs[-1], spark.read.parquet(
-            os.path.join(rollup_path, f"v{vs[-1]}")
-        )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ver, prev = _latest(spark)
+        ver, prev = _latest_snapshot(batch_df.sparkSession, rollup_path)
         if prev is not None:
             applied = prev.agg(F.max("__batch")).first()[0]
             if applied is not None and applied >= batch_id:
@@ -334,12 +409,7 @@ def read_snapshot_version(spark, snapshot_path: str, version: int | None = None)
     silently reads an empty frame."""
     import os
 
-    versions = sorted(
-        int(d[1:]) for d in (
-            os.listdir(snapshot_path) if os.path.isdir(snapshot_path) else []
-        )
-        if d.startswith("v") and d[1:].isdigit()
-    )
+    versions = snapshot_versions(snapshot_path)
     if version is None:
         if not versions:
             raise FileNotFoundError(f"no snapshot versions under {snapshot_path}")
@@ -362,12 +432,7 @@ def vacuum_snapshot_versions(snapshot_path: str, keep_last: int = 2) -> list[int
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    versions = sorted(
-        int(d[1:]) for d in (
-            os.listdir(snapshot_path) if os.path.isdir(snapshot_path) else []
-        )
-        if d.startswith("v") and d[1:].isdigit()
-    )
+    versions = snapshot_versions(snapshot_path)
     doomed = versions[:-keep_last] if len(versions) > keep_last else []
     for v in doomed:
         shutil.rmtree(os.path.join(snapshot_path, f"v{v}"))
@@ -458,20 +523,9 @@ def span_dedup_ingest_sink(
         ).select(
             F.col("id").alias(id_col), F.col("text_dedup").alias(text_col)
         )
-        (
-            accepted.withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(corpus_path)
-        )
-        (
-            corpus_span_grams(accepted, text_col, k)
-            .withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(idx_path)
+        write_batch_partition(accepted, batch_id, corpus_path)
+        write_batch_partition(
+            corpus_span_grams(accepted, text_col, k), batch_id, idx_path
         )
 
     return _sink
@@ -524,13 +578,7 @@ def mv_maintain_sink(
     )
 
     def _latest(spark):
-        if not os.path.isdir(state_path):
-            return -1, None, None, -1
-        vs = sorted(
-            int(d[1:])
-            for d in os.listdir(state_path)
-            if d.startswith("v") and d[1:].isdigit()
-        )
+        vs = snapshot_versions(state_path)
         if not vs:
             return -1, None, None, -1
         v = vs[-1]

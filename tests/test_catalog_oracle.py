@@ -47,6 +47,9 @@ SMOKE_NAMES = sorted(
         "bootstrap_ci_mean_price",
         "ann_pq_checked",
         "ngram_jaccard_prefix",
+        # both streaming replay shapes: library sink, inline sink
+        "stream_dedup_ingest_checked",
+        "stream_hll_ingest_checked",
     }
 )
 

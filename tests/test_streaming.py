@@ -697,3 +697,27 @@ def test_mv_maintain_sink_refuses_pre_upgrade_state(spark, tmp_path):
     shutil.rmtree(path)
     sink(b0, 1)
     assert os.path.isfile(os.path.join(path, "v0", "_BATCH"))
+
+
+def test_replay_failure_leaks_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A sink that raises mid-replay propagates out of the query and
+    still leaves no temp dir behind (the replay removes it in a
+    finally)."""
+    import tempfile
+
+    import pandas_etl_spark.streaming as streaming
+
+    root = tmp_path / "t"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+
+    def failing_sink_factory(*args, **kwargs):
+        def sink(batch_df, batch_id):
+            raise RuntimeError("injected sink failure")
+
+        return sink
+
+    monkeypatch.setattr(streaming, "dedup_ingest_sink", failing_sink_factory)
+    with pytest.raises(Exception, match="injected sink failure"):
+        QUERIES["stream_dedup_ingest_checked"](spark, sf_dir)
+    assert list(root.iterdir()) == []
