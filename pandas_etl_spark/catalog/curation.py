@@ -1411,6 +1411,38 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MH_PERMS = 64
 
 
+def _source_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (source, gram) word 5-grams — the set both source
+    signature queries sketch."""
+    from pandas_etl_spark.functions.text import tokens, word_ngrams
+
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    return (
+        docs.select("source", tokens("text").alias("t"))
+        .select(
+            "source",
+            F.explode(F.array_distinct(word_ngrams("t", 5))).alias("gram"),
+        )
+        .distinct()
+    )
+
+
+def _source_signature_pairs(sig: DataFrame, num_perm: int) -> DataFrame:
+    """Every source pair's signature agreement off a flat ``(source,
+    m0..)`` frame: |sources|² broadcast compare scored by
+    functions/dedup.signature_agreement (codegen'd CASE-sum)."""
+    from pandas_etl_spark.functions.dedup import signature_agreement, signature_sides
+
+    a, b = signature_sides(sig, "source", num_perm)
+    matches = F.expr(signature_agreement(num_perm))
+    return a.join(F.broadcast(b), F.col("source_a") < F.col("source_b")).select(
+        "source_a",
+        "source_b",
+        matches.cast("bigint").alias("n_matching_perms"),
+        F.round(matches / F.lit(float(num_perm)), 6).alias("est_jaccard"),
+    )
+
+
 @query("minhash_source_signature")
 def q_minhash_source_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-path twin of source_overlap_jaccard: every source reduces
@@ -1424,40 +1456,10 @@ def q_minhash_source_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (xxhash64 is engine-specific);
     tests/test_curation_ops.py bounds the estimate against the exact
     gram Jaccard at the standard 1/sqrt(64) MinHash error."""
-    from pandas_etl_spark.functions.text import tokens, word_ngrams
-
-    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    g = (
-        docs.select("source", tokens("text").alias("t"))
-        .select(
-            "source",
-            F.explode(F.array_distinct(word_ngrams("t", 5))).alias("gram"),
-        )
-        .distinct()
+    sig = _source_grams(spark, sf_dir).groupBy("source").agg(
+        *[F.min(F.xxhash64("gram", F.lit(i))).alias(f"m{i}") for i in range(_MH_PERMS)]
     )
-    sig = g.groupBy("source").agg(
-        F.array(
-            *[
-                F.min(F.xxhash64("gram", F.lit(i)))
-                for i in range(_MH_PERMS)
-            ]
-        ).alias("sig")
-    )
-    a = sig.select(F.col("source").alias("source_a"), F.col("sig").alias("sa"))
-    b = sig.select(F.col("source").alias("source_b"), F.col("sig").alias("sb"))
-    pairs = a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y),
-            lambda t: t,
-        )
-    )
-    return pairs.select(
-        "source_a",
-        "source_b",
-        matches.cast("bigint").alias("n_matching_perms"),
-        F.round(matches / F.lit(float(_MH_PERMS)), 6).alias("est_jaccard"),
-    )
+    return _source_signature_pairs(sig, _MH_PERMS)
 
 
 _KANON_K = 10
@@ -1672,55 +1674,14 @@ def q_minhash_source_signature_checked(
     exact int64, so the per-source signatures and the signature-compare
     similarity hash-match cross-engine. Same shape: distinct
     (source, gram) reduction, ONE source-keyed aggregate folding all 16
-    mins map-side, |sources|² broadcast compare."""
-    from pandas_etl_spark.functions.dedup import (
-        _P40,
-        portable_perm_params,
-    )
-    from pandas_etl_spark.functions.text import tokens, word_ngrams
+    mins map-side (functions/dedup.portable_minhash), and the same
+    |sources|² broadcast compare and scorer as the xxhash64 twin."""
+    from pandas_etl_spark.functions.dedup import portable_minhash
 
-    params = portable_perm_params(_MHSIG_PERMS, seed=42)
-    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    g = (
-        docs.select("source", tokens("text").alias("t"))
-        .select(
-            "source",
-            F.explode(F.array_distinct(word_ngrams("t", 5))).alias("gram"),
-        )
-        .distinct()
+    sig = portable_minhash(
+        _source_grams(spark, sf_dir), "source", "gram", _MHSIG_PERMS, seed=42
     )
-    h = g.select(
-        "source",
-        F.expr(
-            "cast(conv(substring(md5(gram), 1, 10), 16, 10) as bigint)"
-        ).alias("h"),
-    )
-    sig = h.groupBy("source").agg(
-        *[
-            F.min(F.expr(f"(h * {a}L + {b}L) % {_P40}L")).alias(f"m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    a = sig.select(
-        F.col("source").alias("source_a"),
-        *[F.col(f"m{i}").alias(f"am{i}") for i in range(_MHSIG_PERMS)],
-    )
-    b = sig.select(
-        F.col("source").alias("source_b"),
-        *[F.col(f"m{i}").alias(f"bm{i}") for i in range(_MHSIG_PERMS)],
-    )
-    matches = None
-    for i in range(_MHSIG_PERMS):
-        term = F.when(F.col(f"am{i}") == F.col(f"bm{i}"), 1).otherwise(0)
-        matches = term if matches is None else matches + term
-    return a.join(
-        F.broadcast(b), F.col("source_a") < F.col("source_b")
-    ).select(
-        "source_a",
-        "source_b",
-        matches.cast("bigint").alias("n_matching_perms"),
-        F.round(matches * 1.0 / _MHSIG_PERMS, 6).alias("est_jaccard"),
-    )
+    return _source_signature_pairs(sig, _MHSIG_PERMS)
 
 
 @query(

@@ -323,7 +323,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_portable_oracle(num_perm: int = 32, bands: int = 8, k: int = 5, threshold: float = 0.4) -> str:
     """Generate the DuckDB SQL replicating minhash_lsh_pairs_portable
-    bit-for-bit (same md5-derived 40-bit hashes, same permutations)."""
+    (same md5-derived 40-bit hashes, same permutations, same agreement
+    score). It bands on the exact signature slice, where Spark buckets
+    a murmur3 hash of it — equal whenever no hash collision adds a
+    verified pair."""
     params = dd.portable_perm_params(num_perm)
     rows = num_perm // bands
     sig_cols = ",\n           ".join(
@@ -374,9 +377,10 @@ def _minhash_portable_oracle(num_perm: int = 32, bands: int = 8, k: int = 5, thr
 @query("minhash_lsh_pairs_checked", oracle=_minhash_portable_oracle())
 def q_minhash_lsh_pairs_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-reproducible MinHash-LSH (md5-derived 40-bit hashes, int64
-    exact arithmetic, concatenated-signature band buckets) — proves the
-    LSH pipeline end-to-end against DuckDB. The xxhash64 variant below is
-    the faster production path."""
+    exact arithmetic) through the production LSH layer
+    (functions/dedup.minhash_lsh) — proves banding, pair dedup and
+    verification end-to-end against DuckDB. The xxhash64 variant below
+    differs only in its signature hash."""
     d = load_table(spark, sf_dir, "documents")
     return dd.minhash_lsh_pairs_portable(
         d, "text", "doc_id", num_perm=32, bands=8, k=5, threshold=0.4

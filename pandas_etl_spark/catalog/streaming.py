@@ -524,7 +524,7 @@ def _ts_halves(frame: DataFrame, cutoff: float) -> list[DataFrame]:
 def _dedup_ingest_run(spark: SparkSession, sf_dir: str):
     """The run ``stream_dedup_ingest`` and ``stream_dedup_ingest_checked``
     share: documents replayed even-then-odd through
-    ``dedup_ingest_sink(threshold=0.5, indexed=True)``. Returns the
+    ``dedup_ingest_sink(threshold=0.5)``. Returns the
     input frame and the final corpus membership (doc_id, batch). The
     membership is collected before temp cleanup — bounded at the gate
     scales these twins run at (the production path streams to durable
@@ -535,9 +535,7 @@ def _dedup_ingest_run(spark: SparkSession, sf_dir: str):
     with replay_microbatches(
         spark,
         _parity_batches(docs),
-        lambda tmp: dedup_ingest_sink(
-            os.path.join(tmp, "corpus"), threshold=0.5, indexed=True
-        ),
+        lambda tmp: dedup_ingest_sink(os.path.join(tmp, "corpus"), threshold=0.5),
     ) as tmp:
         try:
             rows = [
@@ -1146,7 +1144,7 @@ def _stream_dedup_ingest_checked_oracle() -> str:
     """ANSI replay of the two-batch streaming dedup ingest (VERDICT r8
     #7 — batching-invariance twin of the rows-only
     ``stream_dedup_ingest``): batch 0 = even doc_ids against an empty
-    corpus (all append, and they freeze the stop set — the ``indexed``
+    corpus (all append, and they freeze the stop set — the index-backed
     sink's contract), batch 1 = odd doc_ids classified against the
     even corpus with that frozen stop set (md5 exact + corpus-rare
     k-gram Jaccard >= 0.5, the dedup_incremental oracle fragments
@@ -1199,7 +1197,7 @@ def _stream_dedup_ingest_checked_oracle() -> str:
 def q_stream_dedup_ingest_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-CHECKED streaming corpus ingestion (the batching-
     invariance twin VERDICT r8 #7 asked for): the SAME two-micro-batch
-    file stream + ``dedup_ingest_sink(indexed=True)`` run as the
+    file stream + ``dedup_ingest_sink`` run as the
     rows-only ``stream_dedup_ingest`` (``_dedup_ingest_run``), but the
     output is the per-doc corpus membership (doc_id, batch) instead of
     a 1-row summary — so the oracle hash-verifies WHICH documents each

@@ -36,27 +36,18 @@ def curate_corpus(
     jaccard_threshold: float = 0.85,
     shingle_k: int = 5,
     max_df: int = 50,
-    persist_intermediate: bool = False,
 ) -> DataFrame:
     """Surviving documents with their curation annotations.
 
     The gated+exact-deduped frame feeds BOTH the near-dup pair
     computation AND the final anti-join, so its scan→annotate→gate→
-    dedup prefix (one scan + one shuffle) executes twice.
-    ``persist_intermediate=False`` (default) accepts the recompute:
-    measured at sf0.1 the duplicated prefix costs ~1.3s while a
-    MEMORY_AND_DISK persist of the full-text rows costs ~2.8s extra
-    (6.3s vs 3.5s end-to-end) — materializing wide text rows into block
-    storage is slower than re-running a column-pruned scan that
+    dedup prefix (one scan + one shuffle) executes twice. The recompute
+    is accepted: measured at sf0.1 the duplicated prefix costs ~1.3s
+    while a MEMORY_AND_DISK persist of the full-text rows costs ~2.8s
+    extra (6.3s vs 3.5s end-to-end) — materializing wide text rows into
+    block storage is slower than re-running a column-pruned scan that
     Catalyst narrows per consumer (the anti-join side never re-reads
-    ``text``). Set ``persist_intermediate=True`` when the prefix is
-    genuinely expensive to recompute — remote object-store scans,
-    JDBC sources, or upstream multi-shuffle transforms — where one
-    materialization beats two source reads. The persisted handle is
-    then attached to the returned DataFrame as ``curate_cache``; call
-    ``release_cache(result)`` after the sink action to free it (the
-    cache is evictable block storage, so leaving it degrades gracefully
-    rather than leaking)."""
+    ``text``)."""
     annotated = docs.select(
         "*",
         tx.token_count(text_col).alias("n_tokens"),
@@ -66,10 +57,6 @@ def curate_corpus(
         (F.col("n_tokens") >= min_tokens) & (F.col("quality") >= min_quality)
     )
     unique = exact_dedup(gated, text_col, id_col)
-    if persist_intermediate:
-        from pyspark import StorageLevel
-
-        unique = unique.persist(StorageLevel.MEMORY_AND_DISK)
     # high thresholds → prefix-filtered pair plan (identical results,
     # candidate mass shrinks with (1-t); the bucket plan wins below
     # ~0.7 where prefixes stop being selective — SCALE.md measurements)
@@ -80,19 +67,5 @@ def curate_corpus(
         unique, text_col, id_col, k=shingle_k, threshold=jaccard_threshold, max_df=max_df
     )
     drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    result = unique.join(drop, id_col, "left_anti")
-    if persist_intermediate:
-        result.curate_cache = unique
-    return result
+    return unique.join(drop, id_col, "left_anti")
 
-
-def release_cache(df: DataFrame) -> None:
-    """Unpersist the intermediate cached by :func:`curate_corpus`.
-
-    No-op when the frame carries no cache handle (``persist_intermediate
-    =False``, or the handle was lost through further transformations —
-    Spark DataFrames don't propagate Python attributes; keep the
-    curate_corpus result itself if you intend to release)."""
-    cache = getattr(df, "curate_cache", None)
-    if cache is not None:
-        cache.unpersist()

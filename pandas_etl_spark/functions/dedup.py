@@ -526,7 +526,8 @@ def minhash_signatures(
     k: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig array<bigint>) MinHash signatures.
+    """(id, m0..m{n-1}) MinHash signature columns over xxhash64 shingle
+    hashes — the production hash.
 
     Plan: explode shingles → one groupBy(id) carrying ``num_perm`` plain
     ``min(pmod(h*a+b, P))`` aggregates. All aggregates are whole-stage
@@ -537,35 +538,132 @@ def minhash_signatures(
     hashed = char_shingles(df, text_col, id_col, k).select(
         "id", F.abs(F.xxhash64("shingle")).alias("h")
     )
-    aggs = [
-        F.min(F.expr(f"pmod(h * {a}L + {b}L, {_PRIME}L)")).alias(f"m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return (
-        hashed.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"m{i}") for i in range(num_perm)]).alias("sig"))
+    return hashed.groupBy("id").agg(
+        *[
+            F.min(F.expr(f"pmod(h * {a}L + {b}L, {_PRIME}L)")).alias(f"m{i}")
+            for i, (a, b) in enumerate(params)
+        ]
     )
 
 
-def minhash_lsh_pairs(
+# Portable MinHash: md5-derived 40-bit item hashes with small-coefficient
+# permutations — every intermediate fits int64 exactly, so an ANSI-SQL
+# engine (the DuckDB oracle) reproduces it bit-for-bit. The xxhash64
+# variant above stays the production hash (faster, engine-native).
+_P40 = 1099511627689  # prime > 2^40
+
+
+def portable_perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
+    """(a, b) with a < 2^20, b < 2^40: h*a+b < 2^61 — exact in int64."""
+    return [
+        ((a % ((1 << 20) - 1)) + 1, b % _P40) for a, b in _perm_params(num_perm, seed)
+    ]
+
+
+def portable_minhash(
+    df: DataFrame, key: str, item: str, num_perm: int, seed: int = 42
+) -> DataFrame:
+    """(key, m0..m{n-1}) portable MinHash over a ``(key, item)`` frame:
+    each item string hashes to the 40-bit md5 prefix, permutation i is
+    ``(h*a + b) % P40`` under :func:`portable_perm_params`, and one
+    groupBy(key) folds all ``num_perm`` mins map-side. The one portable
+    aggregate behind shingle signatures and source signatures alike."""
+    hashed = df.select(
+        key,
+        F.expr(f"cast(conv(substring(md5({item}), 1, 10), 16, 10) as bigint)").alias("h"),
+    )
+    return hashed.groupBy(key).agg(
+        *[
+            F.min(F.expr(f"(h * {a}L + {b}L) % {_P40}L")).alias(f"m{i}")
+            for i, (a, b) in enumerate(portable_perm_params(num_perm, seed))
+        ]
+    )
+
+
+def minhash_signatures_portable(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
+    num_perm: int = 32,
     k: int = 5,
-    threshold: float = 0.5,
     seed: int = 42,
-    max_bucket: int | None = 1000,
 ) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs, verified by estimated Jaccard
-    (signature agreement rate ≥ threshold).
+    """(id, m0..m{n-1}) MinHash signature columns, oracle-reproducible
+    (:func:`portable_minhash` over the k-char shingles)."""
+    return portable_minhash(
+        char_shingles(df, text_col, id_col, k), "id", "shingle", num_perm, seed
+    )
 
-    Scale path: candidates come only from equal (band, band-hash) buckets
-    — the shuffle key is the band hash, so cost is proportional to bucket
-    collisions, not N². ``bands`` tunes the S-curve: more bands → recall
-    at lower similarity.
+
+def signature_agreement(num_perm: int) -> str:
+    """SQL counting the equal slots of the :func:`signature_sides`
+    columns ``__sa0..`` vs ``__sb0..``: an integer CASE-sum, so
+    ``/ num_perm`` is the estimated Jaccard exactly. Codegen'd flat
+    arithmetic (r10): a ``size(filter(zip_with(...)))`` fold is a
+    CodegenFallback HOF chain that drops the per-pair projection to
+    interpreted eval (same finding as the flattened cosine scorers). A
+    string because a 64-term Column chain costs seconds of py4j
+    plan-build time."""
+    return "(" + " + ".join(
+        f"(CASE WHEN __sa{i} = __sb{i} THEN 1 ELSE 0 END)" for i in range(num_perm)
+    ) + ")"
+
+
+def signature_sides(
+    sig: DataFrame, key: str, num_perm: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two join sides :func:`signature_agreement` reads off a
+    ``(key, m0..)`` signature frame: ``({key}_a, __sa0..)`` and
+    ``({key}_b, __sb0..)`` — scalar longs straight off the aggregate."""
+    return tuple(
+        sig.selectExpr(
+            f"{key} as {key}_{s}", *[f"m{i} as __s{s}{i}" for i in range(num_perm)]
+        )
+        for s in "ab"
+    )
+
+
+def lsh_bands(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(id, band, bucket) LSH banding of flat ``(id, m0..)`` signatures:
+    band b's bucket is the murmur3 ``F.hash`` of its ``num_perm //
+    bands`` slots. Equal slices always share a bucket; a 32-bit hash
+    collision can only ADD a candidate, which verification then
+    scores."""
+    assert num_perm % bands == 0
+    rows = num_perm // bands
+    return sig.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.hash(
+                            *[F.col(f"m{b * rows + r}") for r in range(rows)]
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def minhash_lsh(
+    sig: DataFrame,
+    num_perm: int,
+    bands: int,
+    threshold: float,
+    max_bucket: int | None,
+) -> DataFrame:
+    """The MinHash-LSH layer over flat ``(id, m0..m{n-1})`` signatures,
+    whichever hash produced them: candidates from equal :func:`lsh_bands`
+    buckets, pair dedup, verification by signature agreement rate ≥
+    ``threshold`` → ``(id_a, id_b, est_jaccard)``, id_a < id_b.
+
+    Scale path: the shuffle key is the band hash, so cost is
+    proportional to bucket collisions, not N². ``bands`` tunes the
+    S-curve: more bands → recall at lower similarity.
 
     ``max_bucket`` is the LSH skew guard. Without it, boilerplate-heavy
     corpora are quadratic: ultra-common shingles (site chrome, license
@@ -581,41 +679,13 @@ def minhash_lsh_pairs(
     representative at O(B) pairs; the signature-agreement verification
     below then separates real families (members ≈ rep → pairs survive,
     and connected-components downstream closes the cluster) from
-    template chrome (members disagree with the rep → filtered). Pass
-    ``None`` to disable (exact gate-scale parity with the unbanded
-    oracle)."""
-    assert num_perm % bands == 0
-    rows = num_perm // bands
-    # Null-id rows can never reach the output (the verification joins
-    # below are inner on id), but WITHOUT this explicit filter only the
-    # join branch gets an inferred isnotnull pushed into its scan — the
-    # banded branch's scan then differs, the two signature subtrees stop
-    # canonicalizing equal, and AQE cannot stage-reuse them: the whole
-    # shingle+64-min-agg pipeline executed TWICE (measured 12.2s of
-    # 37s executor CPU at sf0.1). With the filter both branches are
-    # identical and the signatures compute once.
-    df = df.filter(F.col(id_col).isNotNull())
-    sig = minhash_signatures(df, text_col, id_col, num_perm, k, seed)
+    template chrome (members disagree with the rep → filtered). ``None``
+    disables it (exact parity with the unbanded oracle)."""
     # candidate generation carries ONLY (id, band, bucket) through the
-    # shuffle — signatures (the wide arrays) re-join after pair dedup
+    # shuffle — signatures (the wide columns) re-join after pair dedup
     # (carrying them through the bucket join measured ~100× the shuffle
     # bytes: Σ bucket² rows × 0.5 KB of sig payload)
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            *[F.col("sig").getItem(b * rows + r) for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    banded = lsh_bands(sig, num_perm, bands)
     star = None
     if max_bucket is not None:
         # skew guard: bucket size + min(id) as WINDOW aggregates over
@@ -648,69 +718,46 @@ def minhash_lsh_pairs(
     if star is not None:
         cand = cand.unionByName(star)
     cand = cand.dropDuplicates(["id_a", "id_b"])
-    # Flat codegen'd agreement count (r10): the former
-    # size(filter(zip_with(...))) is a CodegenFallback HOF chain that
-    # drops the per-pair projection to interpreted eval (same finding
-    # as the flattened cosine scorers). sig is array(m0..m63) straight
-    # off the aggregate, so sig[i] collapses to the raw agg column and
-    # the join sides carry scalar longs; the CASE-sum is an integer, so
-    # est_jaccard is bit-identical to the HOF count (the portable twin
-    # below has scored this way since r8). Expressions ship as strings
-    # — a 64-term Column chain costs seconds of py4j plan-build time.
-    flat_a = sig.selectExpr(
-        "id as id_a", *[f"sig[{i}] as __sa{i}" for i in range(num_perm)]
-    )
-    flat_b = sig.selectExpr(
-        "id as id_b", *[f"sig[{i}] as __sb{i}" for i in range(num_perm)]
-    )
-    with_sigs = cand.join(flat_a, "id_a").join(flat_b, "id_b")
-    agree_n = " + ".join(
-        f"(CASE WHEN __sa{i} = __sb{i} THEN 1 ELSE 0 END)"
-        for i in range(num_perm)
-    )
+    sa, sb = signature_sides(sig, "id", num_perm)
     return (
-        with_sigs.withColumn(
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(
             "est_jaccard",
-            F.expr(f"({agree_n})").cast("double") / F.lit(float(num_perm)),
+            F.expr(signature_agreement(num_perm)).cast("double")
+            / F.lit(float(num_perm)),
         )
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
 
 
-# Portable MinHash: md5-derived 40-bit shingle hashes with small-coefficient
-# permutations — every intermediate fits int64 exactly, so an ANSI-SQL
-# engine (the DuckDB oracle) reproduces it bit-for-bit. The xxhash64
-# variant above stays the production path (faster, engine-native).
-_P40 = 1099511627689  # prime > 2^40
-
-
-def portable_perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
-    """(a, b) with a < 2^20, b < 2^40: h*a+b < 2^61 — exact in int64."""
-    return [
-        ((a % ((1 << 20) - 1)) + 1, b % _P40) for a, b in _perm_params(num_perm, seed)
-    ]
-
-
-def minhash_signatures_portable(
+def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 32,
+    num_perm: int = 64,
+    bands: int = 16,
     k: int = 5,
+    threshold: float = 0.5,
     seed: int = 42,
+    max_bucket: int | None = 1000,
 ) -> DataFrame:
-    """(id, m0..m{n-1}) MinHash signature columns, oracle-reproducible."""
-    params = portable_perm_params(num_perm, seed)
-    hashed = char_shingles(df, text_col, id_col, k).select(
-        "id",
-        F.expr("cast(conv(substring(md5(shingle), 1, 10), 16, 10) as bigint)").alias("h"),
-    )
-    aggs = [
-        F.min(F.expr(f"(h * {a}L + {b}L) % {_P40}L")).alias(f"m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return hashed.groupBy("id").agg(*aggs)
+    """MinHash-LSH near-dup candidate pairs, verified by estimated Jaccard
+    (signature agreement rate ≥ threshold): xxhash64
+    :func:`minhash_signatures` through the :func:`minhash_lsh` layer,
+    with its ``max_bucket`` skew guard on by default."""
+    # Null-id rows can never reach the output (the verification joins
+    # are inner on id), but WITHOUT this explicit filter only the
+    # join branch gets an inferred isnotnull pushed into its scan — the
+    # banded branch's scan then differs, the two signature subtrees stop
+    # canonicalizing equal, and AQE cannot stage-reuse them: the whole
+    # shingle+64-min-agg pipeline executed TWICE (measured 12.2s of
+    # 37s executor CPU at sf0.1). With the filter both branches are
+    # identical and the signatures compute once.
+    df = df.filter(F.col(id_col).isNotNull())
+    sig = minhash_signatures(df, text_col, id_col, num_perm, k, seed)
+    return minhash_lsh(sig, num_perm, bands, threshold, max_bucket)
 
 
 def minhash_lsh_pairs_portable(
@@ -724,89 +771,29 @@ def minhash_lsh_pairs_portable(
     seed: int = 42,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Oracle-reproducible MinHash-LSH pairs: band bucket key is the
-    concatenated signature slice (portable across engines, unlike
-    murmur3 ``F.hash``). ``max_bucket`` is the same skew guard as the
-    production variant's (oversized buckets degrade to a star against
-    min(id) — see :func:`minhash_lsh_pairs`), default OFF here so the
-    gate-scale oracle comparison stays unconditional — an oracle
-    adopting it must mirror both the cap and the star on the same
-    bucket key."""
-    assert num_perm % bands == 0
-    rows = num_perm // bands
-    # same explicit null-id filter as minhash_lsh_pairs: keeps the
-    # banded and verification branches' scans canonically identical so
-    # AQE stage-reuses the signature pipeline (inner sig joins drop
-    # null ids anyway — output unchanged)
+    """Oracle-reproducible MinHash-LSH pairs: md5
+    :func:`minhash_signatures_portable` through the SAME
+    :func:`minhash_lsh` layer as the production path, so the oracle
+    check covers the banding, guard and verification that production
+    runs. The oracle bands on the exact signature slice; the layer's
+    murmur3 bucket only adds hash-collision candidates, which must then
+    pass verification. ``max_bucket`` defaults OFF so the gate-scale
+    oracle comparison stays unconditional."""
+    # same null-id filter as minhash_lsh_pairs (scan canonicalization)
     df = df.filter(F.col(id_col).isNotNull())
     sig = minhash_signatures_portable(df, text_col, id_col, num_perm, k, seed)
-    # same shuffle-slimming as the xxhash64 variant: bucket join carries
-    # only (id, band, bucket); signature columns re-join after pair dedup
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "-", *[F.col(f"m{b * rows + r}") for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    star = None
-    if max_bucket is not None:
-        # window-fused skew guard — same shape as minhash_lsh_pairs
-        # above (one (band,bucket) shuffle shared with the self-join)
-        wbb = Window.partitionBy("band", "bucket")
-        tagged = banded.select(
-            "id",
-            "band",
-            "bucket",
-            F.count(F.lit(1)).over(wbb).alias("__bn"),
-            F.min("id").over(wbb).alias("__rep"),
-        )
-        star = tagged.filter(
-            (F.col("__bn") > max_bucket) & (F.col("id") != F.col("__rep"))
-        ).select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
-        banded = tagged.filter(F.col("__bn") <= max_bucket).drop(
-            "__bn", "__rep"
-        )
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    if star is not None:
-        cand = cand.unionByName(star)
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    sa = sig.select(F.col("id").alias("id_a"), *[F.col(f"m{i}").alias(f"am{i}") for i in range(num_perm)])
-    sb = sig.select(F.col("id").alias("id_b"), *[F.col(f"m{i}").alias(f"bm{i}") for i in range(num_perm)])
-    with_sigs = cand.join(sa, "id_a").join(sb, "id_b")
-    agree = None
-    for i in range(num_perm):
-        term = F.when(F.col(f"am{i}") == F.col(f"bm{i}"), 1).otherwise(0)
-        agree = term if agree is None else agree + term
-    return (
-        with_sigs.withColumn("est_jaccard", agree / F.lit(float(num_perm)))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return minhash_lsh(sig, num_perm, bands, threshold, max_bucket)
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+def _simhash(
+    df: DataFrame, text_col: str, id_col: str, token_hash: str, bits: int
 ) -> DataFrame:
-    """(id, sim bigint) 64-bit SimHash: per token-occurrence xxhash64,
-    vote +1/−1 per bit, sign → bit.
+    """(id, sim bigint) SimHash over normalized whitespace tokens: each
+    token occurrence hashes by the SQL expression ``token_hash`` (over
+    ``tok``), votes +1/−1 per bit, sign → bit.
 
-    Plan: explode tokens → groupBy(id) with 64 codegen'd
-    ``sum(bit ? 1 : -1)`` vote aggregates → assemble the 64 sign bits.
+    Plan: explode tokens → groupBy(id) with ``bits`` codegen'd
+    ``sum(bit ? 1 : -1)`` vote aggregates → assemble the sign bits.
     (The per-row nested higher-order fold is interpreted per element —
     measured ~10× slower.) One shuffle on id with map-side partials."""
     toks = ensure_parallelism(
@@ -815,23 +802,31 @@ def simhash_signatures(
         "id",
         F.explode(F.expr("filter(split(_norm, ' '), t -> t <> '')")).alias("tok"),
     )
-    hashed = toks.select("id", F.xxhash64("tok").alias("h"))
+    hashed = toks.select("id", F.expr(token_hash).alias("h"))
     votes = hashed.groupBy("id").agg(
         *[
             # branch-free ±1 vote: ((bit)*2 - 1) generates less code than
             # a CASE and the 64-agg compile is the cold-path cost here
             F.sum(F.expr(f"(((h >> {b}) & 1) * 2 - 1)")).alias(f"v{b}")
-            for b in range(64)
+            for b in range(bits)
         ]
     )
     sim = None
-    for b in range(64):
+    for b in range(bits):
         # shiftleft(1L, 63) wraps to the long sign bit — intended
         bit = F.when(F.col(f"v{b}") > 0, F.expr(f"shiftleft(1L, {b})")).otherwise(
             F.lit(0).cast("bigint")
         )
         sim = bit if sim is None else sim + bit
     return votes.select("id", sim.alias("sim"))
+
+
+def simhash_signatures(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, sim bigint) 64-bit SimHash over per-token xxhash64 — the
+    production hash (:func:`_simhash`)."""
+    return _simhash(df, text_col, id_col, "xxhash64(tok)", 64)
 
 
 def simhash_signatures_portable(
@@ -841,35 +836,16 @@ def simhash_signatures_portable(
     the ANSI-SQL-reproducible twin of :func:`simhash_signatures` (which
     stays the production path on engine-native xxhash64). Token hash =
     the md5 hex prefix as a ``bits``-wide integer (≤60 bits so every
-    intermediate is exact in int64 on any engine); per-bit ±1 votes,
-    sign → bit, identical plan shape (explode → one groupBy(id) carrying
-    ``bits`` codegen'd sum aggregates)."""
+    intermediate is exact in int64 on any engine); same
+    :func:`_simhash` plan."""
     assert 1 <= bits <= 60  # 15 hex digits
-    toks = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), normalized(text_col).alias("_norm"))
-    ).select(
-        "id",
-        F.explode(F.expr("filter(split(_norm, ' '), t -> t <> '')")).alias("tok"),
+    return _simhash(
+        df,
+        text_col,
+        id_col,
+        f"cast(conv(substring(md5(tok), 1, {(bits + 3) // 4}), 16, 10) as bigint)",
+        bits,
     )
-    hashed = toks.select(
-        "id",
-        F.expr(
-            f"cast(conv(substring(md5(tok), 1, {(bits + 3) // 4}), 16, 10) as bigint)"
-        ).alias("h"),
-    )
-    votes = hashed.groupBy("id").agg(
-        *[
-            F.sum(F.expr(f"(((h >> {b}) & 1) * 2 - 1)")).alias(f"v{b}")
-            for b in range(bits)
-        ]
-    )
-    sim = None
-    for b in range(bits):
-        bit = F.when(F.col(f"v{b}") > 0, F.expr(f"shiftleft(1L, {b})")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sim = bit if sim is None else sim + bit
-    return votes.select("id", sim.alias("sim"))
 
 
 def _chunk_layout(n_chunks: int) -> list[tuple[int, int]]:
@@ -959,7 +935,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 30,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Connected components over near-dup ``pairs`` → ``(id,
     cluster_id)`` where cluster_id is the minimum id reachable through
@@ -967,29 +942,20 @@ def connected_components(
     PAIRS (minhash/simhash/jaccard output) into dedup GROUPS: keep rows
     where ``id == cluster_id``, drop the rest.
 
-    ``algorithm="star"`` (default): alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — converges in O(log n) rounds REGARDLESS of
-    graph diameter (VERDICT r3 #6: label propagation is O(diameter)
-    driver-coordinated rounds, a trap on chain-shaped graphs at 100 TB).
-    Each round is two shuffles over the id-only edge list: large-star
-    hangs every larger neighbor off the neighborhood minimum, small-star
-    contracts the rest; converged when the edge set is stable, at which
-    point edges form stars rooted at component minima.
+    Alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) — converges
+    in O(log n) rounds REGARDLESS of graph diameter (VERDICT r3 #6:
+    label propagation is O(diameter) driver-coordinated rounds, a trap
+    on chain-shaped graphs at 100 TB). Each round is two shuffles over
+    the id-only edge list: large-star hangs every larger neighbor off
+    the neighborhood minimum, small-star contracts the rest; converged
+    when the edge set is stable, at which point edges form stars rooted
+    at component minima.
 
-    ``algorithm="label"``: iterative min-label propagation — each round
-    every node takes the min of its own and its neighbors' labels;
-    converges in graph-diameter rounds. Kept for shallow near-dup
-    graphs (diameter ≤ a handful of hops) where it does fewer total
-    shuffles than the star dance.
-
-    Both: fully distributed (per round: joins/aggregates on persisted
-    id-only frames, LIMIT-1 convergence probes, previous round
-    unpersists), identical output labeling, and both raise if
+    Fully distributed (per round: joins/aggregates on checkpointed
+    id-only frames, LIMIT-1 convergence probes), and raises if
     ``max_iters`` rounds don't converge rather than returning a
-    half-propagated labeling. The converged frame backing the returned
-    plan stays persisted — the handle is attached as ``curate_cache``,
-    releasable with ``functions.curate.release_cache``.
+    half-propagated labeling.
 
     ``nodes`` (optional) widens the universe beyond ids appearing in
     pairs — singletons label themselves."""
@@ -1005,51 +971,7 @@ def connected_components(
         universe = edges.select(F.col("a").alias("id")).distinct()
     else:
         universe = nodes.select(F.col(id_col).alias("id")).distinct()
-    if algorithm == "star":
-        return _cc_star(edges, universe, max_iters)
-    # eager localCheckpoint, not persist: labels is referenced twice per
-    # round, so persisted-but-unbroken lineage grows exponentially in
-    # rounds and the driver dies planning deep iterations (same reasoning
-    # as _cc_star below; blocks are freed by the ContextCleaner)
-    labels = universe.withColumn("label", F.col("id")).localCheckpoint()
-    try:
-        for _ in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges["b"] == labels["id"])
-                .groupBy("a")
-                .agg(F.min("label").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels["id"] == neighbor_min["a"], "left")
-                .select(
-                    labels["id"],
-                    F.least(
-                        labels["label"], F.coalesce(F.col("nmin"), labels["label"])
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                result = labels.select("id", F.col("label").alias("cluster_id"))
-                # the converged label frame backs the returned plan;
-                # expose the handle so callers can free it after their
-                # action — same contract as curate_corpus
-                result.curate_cache = labels
-                return result
-        raise RuntimeError(
-            f"connected_components: no convergence after {max_iters} rounds — "
-            "the pair graph has a longer path than expected; raise max_iters"
-        )
-    finally:
-        edges.unpersist()
+    return _cc_star(edges, universe, max_iters)
 
 
 def _cc_star(edges: DataFrame, universe: DataFrame, max_iters: int) -> DataFrame:
@@ -1070,8 +992,7 @@ def _cc_star(edges: DataFrame, universe: DataFrame, max_iters: int) -> DataFrame
     distinct sets). Labels then read directly off the star edges.
 
     The returned frame carries ``cc_rounds`` (rounds to convergence —
-    asserted O(log n) on a chain graph in tests) and ``curate_cache``
-    (the converged edge frame backing the plan).
+    asserted O(log n) on a chain graph in tests).
 
     Iteration state is carried through eager ``localCheckpoint`` — NOT
     ``persist``: persisting caches blocks but keeps the full logical
@@ -1170,7 +1091,6 @@ def _cc_star(edges: DataFrame, universe: DataFrame, max_iters: int) -> DataFrame
     result = universe.join(roots, universe["id"] == roots["a"], "left").select(
         "id", F.coalesce(F.col("_root"), F.col("id")).alias("cluster_id")
     )
-    result.curate_cache = E
     result.cc_rounds = rounds
     return result
 
@@ -1475,18 +1395,37 @@ def incremental_dedup(
     precomputed index), one inverted-index join keyed on shingle, one
     (new_id, corpus_id) count. New-batch side is small → its per-doc
     frames broadcast."""
-    corp_fp = corpus_df.select(fingerprint(text_col).alias("fp")).distinct()
-    sh_corp = char_shingles(corpus_df, text_col, id_col, k)
-    stop = (
-        sh_corp.groupBy("shingle")
+    stop = _stop_shingles(corpus_df, text_col, id_col, k, max_df)
+    corp_fp, sh_corp_r, n_corp = _index_frames(corpus_df, text_col, id_col, k, stop)
+    return _classify_against(
+        new_df, text_col, id_col, k, threshold, corp_fp, stop, sh_corp_r, n_corp
+    )
+
+
+def _stop_shingles(
+    docs: DataFrame, text_col: str, id_col: str, k: int, max_df: int
+) -> DataFrame:
+    """(shingle) stop set: shingles in more than ``max_df`` of ``docs``."""
+    return (
+        char_shingles(docs, text_col, id_col, k)
+        .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_df)
         .select("shingle")
     )
-    sh_corp_r = sh_corp.join(stop, "shingle", "left_anti")
-    n_corp = sh_corp_r.groupBy("id").agg(F.count(F.lit(1)).alias("n_b"))
-    return _classify_against(
-        new_df, text_col, id_col, k, threshold, corp_fp, stop, sh_corp_r, n_corp
+
+
+def _index_frames(
+    docs: DataFrame, text_col: str, id_col: str, k: int, stop: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The dedup-index frames of ``docs`` under a ``stop`` set: ``fp``
+    (distinct content fingerprints), ``postings`` (rare (id, shingle))
+    and ``sizes`` (per-doc rare-shingle counts ``n_b``)."""
+    postings = char_shingles(docs, text_col, id_col, k).join(stop, "shingle", "left_anti")
+    return (
+        docs.select(fingerprint(text_col).alias("fp")).distinct(),
+        postings,
+        postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_b")),
     )
 
 
@@ -1565,18 +1504,10 @@ def build_dedup_index(
     import json
     import os
 
-    sh_corp = char_shingles(corpus_df, text_col, id_col, k)
-    dfreq = sh_corp.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    stop = dfreq.filter(F.col("df") > max_df).select("shingle")
-    sh_rare = sh_corp.join(stop, "shingle", "left_anti")
-    corpus_df.select(fingerprint(text_col).alias("fp")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "fp"))
-    stop.write.mode("overwrite").parquet(os.path.join(path, "stop"))
-    sh_rare.write.mode("overwrite").parquet(os.path.join(path, "postings"))
-    sh_rare.groupBy("id").agg(F.count(F.lit(1)).alias("n_b")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "sizes"))
+    stop = _stop_shingles(corpus_df, text_col, id_col, k, max_df)
+    fp, postings, sizes = _index_frames(corpus_df, text_col, id_col, k, stop)
+    for name, frame in (("fp", fp), ("stop", stop), ("postings", postings), ("sizes", sizes)):
+        frame.write.mode("overwrite").parquet(os.path.join(path, name))
     with open(os.path.join(path, "_meta.json"), "w") as f:
         json.dump({"k": k, "max_df": max_df, "text_col": text_col}, f)
     return path
@@ -1637,13 +1568,6 @@ def append_to_dedup_index(
     with open(os.path.join(index_path, "_meta.json")) as f:
         meta = json.load(f)
     stop = spark.read.parquet(os.path.join(index_path, "stop"))
-    sh = char_shingles(novel_df, text_col, id_col, meta["k"]).join(
-        stop, "shingle", "left_anti"
-    )
-    novel_df.select(fingerprint(text_col).alias("fp")).distinct().write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "fp"))
-    sh.write.mode("append").parquet(os.path.join(index_path, "postings"))
-    sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_b")).write.mode("append").parquet(
-        os.path.join(index_path, "sizes")
-    )
+    fp, postings, sizes = _index_frames(novel_df, text_col, id_col, meta["k"], stop)
+    for name, frame in (("fp", fp), ("postings", postings), ("sizes", sizes)):
+        frame.write.mode("append").parquet(os.path.join(index_path, name))

@@ -184,27 +184,27 @@ def dedup_ingest_sink(
     k: int = 5,
     threshold: float = 0.5,
     max_df: int = 50,
-    indexed: bool = False,
 ):
     """foreachBatch sink: streaming corpus ingestion with incremental
     dedup — each micro-batch is classified against the corpus written so
-    far (``functions.dedup.incremental_dedup``: exact md5 / near-Jaccard
-    / novel) and ONLY novel documents append, so the corpus stays
-    dedup-clean without ever re-clustering it.
+    far (exact md5 / near-Jaccard / novel, as
+    ``functions.dedup.incremental_dedup``) and ONLY novel documents
+    append, so the corpus stays dedup-clean without ever re-clustering
+    it.
 
-    ``indexed=True`` is the 100 TB shape: the corpus side (fingerprints,
-    stop set, rare shingle postings, sizes) is MAINTAINED as a
-    ``<corpus_path>.dedup_index`` alongside the data, so per-batch cost
-    scales with the batch instead of re-shuffling the whole corpus each
-    trigger. The stop set freezes at the first batch (rebuild
-    periodically with ``functions.dedup.build_dedup_index`` — same
-    drift note as ``append_to_dedup_index``). Index appends partition
+    The corpus side (fingerprints, stop set, rare shingle postings,
+    sizes) is MAINTAINED as a ``<corpus_path>.dedup_index`` alongside
+    the data, so per-batch cost scales with the batch instead of
+    re-shuffling the whole corpus each trigger. The stop set freezes at
+    the first batch (rebuild periodically with
+    ``functions.dedup.build_dedup_index`` — same drift note as
+    ``append_to_dedup_index``). Index appends partition
     by ``__batch`` under dynamic overwrite, so replays overwrite their
     own contribution; classification excludes the replaying batch's own
     prior partitions.
 
-    Replay-safe either way: batches land as ``__batch=<id>`` partitions
-    under dynamic partition overwrite, so re-running a batch (checkpoint
+    Replay-safe: batches land as ``__batch=<id>`` partitions under
+    dynamic partition overwrite, so re-running a batch (checkpoint
     recovery) overwrites its own partition instead of duplicating —
     BUT a replayed batch is re-classified against a corpus that now
     contains other batches' later writes, so classification must stay
@@ -214,7 +214,7 @@ def dedup_ingest_sink(
     Usage::
 
         q = (docs_stream.writeStream.outputMode("append")
-             .foreachBatch(dedup_ingest_sink("/data/corpus", indexed=True))
+             .foreachBatch(dedup_ingest_sink("/data/corpus"))
              .option("checkpointLocation", ckpt).start())
     """
     import os
@@ -223,9 +223,8 @@ def dedup_ingest_sink(
 
     from pandas_etl_spark.functions.dedup import (
         _classify_against,
-        char_shingles,
-        fingerprint,
-        incremental_dedup,
+        _index_frames,
+        _stop_shingles,
     )
 
     idx = corpus_path.rstrip("/") + ".dedup_index"
@@ -243,74 +242,28 @@ def dedup_ingest_sink(
             return
         if not os.path.isdir(os.path.join(idx, "stop")):
             # frozen stop set from the first batch's shingle dfs
-            (
-                char_shingles(written, text_col, id_col, k)
-                .groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > max_df)
-                .select("shingle")
-                .write.mode("overwrite")
-                .parquet(os.path.join(idx, "stop"))
-            )
+            _stop_shingles(written, text_col, id_col, k, max_df).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(idx, "stop"))
         stop = written.sparkSession.read.parquet(os.path.join(idx, "stop"))
-        sh = char_shingles(written, text_col, id_col, k).join(
-            stop, "shingle", "left_anti"
-        )
-        write_batch_partition(sh, batch_id, os.path.join(idx, "postings"))
-        write_batch_partition(
-            sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_b")),
-            batch_id,
-            os.path.join(idx, "sizes"),
-        )
-        write_batch_partition(
-            written.select(fingerprint(text_col).alias("fp")).distinct(),
-            batch_id,
-            os.path.join(idx, "fp"),
-        )
+        fp, postings, sizes = _index_frames(written, text_col, id_col, k, stop)
+        for name, frame in (("postings", postings), ("sizes", sizes), ("fp", fp)):
+            write_batch_partition(frame, batch_id, os.path.join(idx, name))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if indexed:
-            have = os.path.isdir(os.path.join(idx, "postings"))
-            if have:
-                notme = F.col("__batch") != batch_id  # replay: no self-compare
-                cls = _classify_against(
-                    batch_df,
-                    text_col,
-                    id_col,
-                    k,
-                    threshold,
-                    spark.read.parquet(os.path.join(idx, "fp")).where(notme),
-                    spark.read.parquet(os.path.join(idx, "stop")),
-                    spark.read.parquet(os.path.join(idx, "postings")).where(notme),
-                    spark.read.parquet(os.path.join(idx, "sizes")).where(notme),
-                )
-                novel = batch_df.join(
-                    cls.filter(F.col("status") == "novel").select(id_col),
-                    id_col,
-                    "left_semi",
-                )
-            else:
-                novel = batch_df
-            write_batch_partition(novel, batch_id, corpus_path)
-            _append_index(spark, batch_id)
-            return
-        try:
-            corpus = spark.read.parquet(corpus_path).where(
-                F.col("__batch") != batch_id  # replay: don't self-compare
-            )
-            have_corpus = bool(corpus.head(1))
-        except Exception:  # first batch: corpus doesn't exist yet
-            have_corpus = False
-        if have_corpus:
-            cls = incremental_dedup(
+        if os.path.isdir(os.path.join(idx, "postings")):
+            notme = F.col("__batch") != batch_id  # replay: no self-compare
+            cls = _classify_against(
                 batch_df,
-                corpus,
-                text_col=text_col,
-                id_col=id_col,
-                k=k,
-                threshold=threshold,
-                max_df=max_df,
+                text_col,
+                id_col,
+                k,
+                threshold,
+                spark.read.parquet(os.path.join(idx, "fp")).where(notme),
+                spark.read.parquet(os.path.join(idx, "stop")),
+                spark.read.parquet(os.path.join(idx, "postings")).where(notme),
+                spark.read.parquet(os.path.join(idx, "sizes")).where(notme),
             )
             novel = batch_df.join(
                 cls.filter(F.col("status") == "novel").select(id_col),
@@ -320,6 +273,7 @@ def dedup_ingest_sink(
         else:
             novel = batch_df
         write_batch_partition(novel, batch_id, corpus_path)
+        _append_index(spark, batch_id)
 
     return sink
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from typing import NamedTuple
 
 import pytest
 
@@ -34,6 +35,35 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class BuiltQuery(NamedTuple):
+    """What the registry-wide lints read off one built catalog query:
+    its output schema and unpartitioned ordered windows, or the
+    exception that building it (or reading either) raised."""
+
+    schema: object
+    windows: list
+    error: Exception | None
+
+
+@pytest.fixture(scope="session")
+def registry_builds(spark, sf_dir):
+    """Every catalog query built ONCE per session, name -> BuiltQuery.
+    Building a query often runs hidden jobs, so the registry-wide lints
+    share this pass instead of each rebuilding all queries; the
+    DataFrames themselves are not kept."""
+    from pandas_etl_spark.catalog import QUERIES
+    from pandas_etl_spark.plans import unpartitioned_windows
+
+    builds = {}
+    for name, fn in QUERIES.items():
+        try:
+            df = fn(spark, sf_dir)
+            builds[name] = BuiltQuery(df.schema, unpartitioned_windows(df), None)
+        except Exception as e:  # surfaced by each consuming test
+            builds[name] = BuiltQuery(None, None, e)
+    return builds
 
 
 _FAST_TIER_BANNER = (

@@ -35,6 +35,7 @@ SMOKE_NAMES = sorted(
         "dedup_exact",
         "ngram_jaccard_pairs",
         "minhash_lsh_pairs_checked",
+        "minhash_source_signature_checked",
         "simhash_pairs_checked",
         "doc_stats",
         "quality_score",

@@ -284,26 +284,6 @@ class TestMultimodal:
         assert decoded[1].width == again[1].width
 
 
-class TestCurateCache:
-    def test_persist_handle_and_release(self, spark, sf_dir):
-        from pandas_etl_spark.functions.curate import curate_corpus, release_cache
-
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        out = curate_corpus(d, persist_intermediate=True)
-        assert out.curate_cache.storageLevel.useMemory  # persisted on opt-in
-        assert out.count() > 0
-        release_cache(out)
-        assert not out.curate_cache.storageLevel.useMemory  # released
-
-        off = curate_corpus(d)  # default: recompute beats persist (measured)
-        assert getattr(off, "curate_cache", None) is None
-        release_cache(off)  # no handle → no-op, no error
-        # identical survivors either way
-        assert sorted(r.doc_id for r in off.select("doc_id").collect()) == sorted(
-            r.doc_id for r in out.select("doc_id").collect()
-        )
-
-
 class TestTimeparse:
     def test_strptime_translation(self):
         assert strptime_to_java("%d/%m/%y") == "dd/MM/yy"
@@ -582,12 +562,12 @@ class TestSimhashBlockingExact:
 
 
 class TestConnectedComponents:
-    def test_clusters_match_union_find(self, spark):
+    @staticmethod
+    def _labels_and_union_find(spark, nodes, edges):
+        """(connected_components labels, pure-Python union-find labels)
+        over the same node universe, both keyed by node id."""
         from pandas_etl_spark.functions.dedup import connected_components
 
-        # two chains, one triangle, plus singletons from the node universe
-        edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
-        nodes = list(range(1, 5)) + [10, 11, 20, 21, 22, 30, 31]
         parent = {n: n for n in nodes}
 
         def find(x):
@@ -608,6 +588,13 @@ class TestConnectedComponents:
             r.id: r.cluster_id
             for r in connected_components(pairs, nodes=universe).collect()
         }
+        return got, exp
+
+    def test_clusters_match_union_find(self, spark):
+        # two chains, one triangle, plus singletons from the node universe
+        edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
+        nodes = list(range(1, 5)) + [10, 11, 20, 21, 22, 30, 31]
+        got, exp = self._labels_and_union_find(spark, nodes, edges)
         assert got == exp
 
     def test_pairs_only_universe(self, spark):
@@ -626,17 +613,15 @@ class TestConnectedComponents:
         )
         import pytest as _pytest
 
-        for algorithm in ("star", "label"):
-            with _pytest.raises(RuntimeError, match="no convergence"):
-                connected_components(pairs, max_iters=1, algorithm=algorithm)
+        with _pytest.raises(RuntimeError, match="no convergence"):
+            connected_components(pairs, max_iters=1)
 
     def test_star_equals_label_propagation_random_graphs(self, spark):
-        """Property (VERDICT r3 #6): the O(log n) star contraction and the
-        O(diameter) label propagation produce the IDENTICAL labeling on
-        random graphs of mixed shape (chains, cliques, singletons)."""
+        """Property (VERDICT r3 #6): the O(log n) star contraction labels
+        random graphs of mixed shape (chains, cliques, singletons)
+        exactly as a pure-Python union-find does — every node with the
+        minimum id of its component."""
         import random
-
-        from pandas_etl_spark.functions.dedup import connected_components
 
         for seed in (7, 42, 1234):
             rng = random.Random(seed)
@@ -645,21 +630,8 @@ class TestConnectedComponents:
                 (rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(20, 50))
             ]
             edges = [(a, b) for a, b in edges if a != b] or [(0, 1)]
-            pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-            universe = spark.createDataFrame([(i,) for i in range(n)], "id long")
-            star = {
-                r.id: r.cluster_id
-                for r in connected_components(
-                    pairs, nodes=universe, algorithm="star"
-                ).collect()
-            }
-            label = {
-                r.id: r.cluster_id
-                for r in connected_components(
-                    pairs, nodes=universe, algorithm="label", max_iters=n
-                ).collect()
-            }
-            assert star == label, f"seed {seed}"
+            got, exp = self._labels_and_union_find(spark, range(n), edges)
+            assert got == exp, f"seed {seed}"
 
     def test_star_rounds_logarithmic_on_chain(self, spark):
         """A 64-node chain has diameter 63 — label propagation needs ~63
@@ -672,7 +644,7 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
         )
-        res = connected_components(pairs, algorithm="star", max_iters=14)
+        res = connected_components(pairs, max_iters=14)
         got = {r.id: r.cluster_id for r in res.collect()}
         assert got == {i: 0 for i in range(n)}
         assert res.cc_rounds <= 14, res.cc_rounds
@@ -2790,6 +2762,7 @@ def test_minhash_lsh_two_family_mega_bucket(spark):
     from pyspark.sql import functions as F
 
     from pandas_etl_spark.functions.dedup import (
+        lsh_bands,
         minhash_lsh_pairs,
         minhash_signatures,
     )
@@ -2804,31 +2777,11 @@ def test_minhash_lsh_two_family_mega_bucket(spark):
     fam_b = [(100 + i, ub + chrome + f" wb{i}") for i in range(40)]
     df = spark.createDataFrame(fam_a + fam_b, "doc_id long, text string")
     num_perm, bands, cap = 64, 32, 10
-    rows = num_perm // bands
 
     # precondition — the edge occurs: some (band, bucket) holds members
-    # of BOTH families and exceeds the cap (same banding expression the
-    # operator builds internally)
+    # of BOTH families and exceeds the cap (the operator's own banding)
     sig = minhash_signatures(df, "text", "doc_id", num_perm, 5, 42)
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            *[
-                                F.col("sig").getItem(b * rows + r)
-                                for r in range(rows)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band"), F.col("bb.bucket"))
+    banded = lsh_bands(sig, num_perm, bands)
     mixed = (
         banded.groupBy("band", "bucket")
         .agg(

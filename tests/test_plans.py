@@ -799,7 +799,7 @@ def test_weighted_median_no_per_group_serialization(spark, sf_dir):
     assert saw_price_window
 
 
-def test_registry_unpartitioned_window_whitelist(spark, sf_dir):
+def test_registry_unpartitioned_window_whitelist(registry_builds):
     """Repo-wide WindowExec lint (VERDICT r6 #3): every catalog query's
     plan is scanned for unpartitioned ORDERED windows — the shape
     WindowExec warns moves all rows to one task. Each permitted source
@@ -808,8 +808,6 @@ def test_registry_unpartitioned_window_whitelist(spark, sf_dir):
     inside a whitelisted query) fails here and must either switch to
     the range-partitioned prefix/stitch operators or justify itself in
     this table."""
-    from pandas_etl_spark.plans import unpartitioned_windows
-
     # name -> (count, why the frame is bounded / deliberately global)
     whitelist = {
         "propensity_match_pairs": (1, "|partitions|-row keyless-asof boundary-carry stitch"),
@@ -827,14 +825,12 @@ def test_registry_unpartitioned_window_whitelist(spark, sf_dir):
         "cumulative_distinct_users": (1, "|days|-row first-seen cumsum"),
     }
     offenders = {}
-    for name, fn in QUERIES.items():
-        try:
-            w = unpartitioned_windows(fn(spark, sf_dir))
-        except Exception as e:  # pragma: no cover - surface as a failure
+    for name, built in registry_builds.items():
+        if built.error is not None:  # pragma: no cover - surface as a failure
+            e = built.error
             offenders[name] = [f"PLAN BUILD FAILED: {type(e).__name__}: {e}"]
-            continue
-        if w:
-            offenders[name] = w
+        elif built.windows:
+            offenders[name] = built.windows
     unexpected = {
         n: ws
         for n, ws in offenders.items()
@@ -876,13 +872,15 @@ def test_knn_scoring_has_no_interpreted_fold(spark, sf_dir):
         assert not offenders, (name, offenders)
 
 
-def test_minhash_verification_has_no_interpreted_fold(spark, sf_dir):
-    """r10: the signature-agreement verification scores candidate pairs
-    with a codegen'd CASE-sum over the flat m0..m63 agg columns — the
-    former size(filter(zip_with(...))) was a CodegenFallback chain that
-    dropped the per-pair projection to interpreted eval (A/B at sf0.1:
-    warm 4.7 -> 3.4 s). Same offender scan as the kNN scorer pin."""
-    df = QUERIES["minhash_lsh_pairs"](spark, sf_dir)
+@pytest.mark.parametrize("name", ["minhash_lsh_pairs", "minhash_source_signature"])
+def test_minhash_verification_has_no_interpreted_fold(spark, sf_dir, name):
+    """r10: signature agreement is scored with a codegen'd CASE-sum over
+    the flat m0..m{n-1} agg columns (functions/dedup.signature_agreement)
+    — the former size(filter(zip_with(...))) was a CodegenFallback chain
+    that dropped the per-pair projection to interpreted eval (A/B at
+    sf0.1: warm 4.7 -> 3.4 s). Pinned on the LSH verification and the
+    source-signature compare. Same offender scan as the kNN scorer pin."""
+    df = QUERIES[name](spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]

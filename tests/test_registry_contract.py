@@ -17,23 +17,23 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from pandas_etl_spark.catalog import ORACLES, QUERIES
+from pandas_etl_spark.catalog import ORACLES
 
 _NESTED = (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
 
 
-def test_oracle_backed_outputs_are_flat(spark, sf_dir):
+def test_oracle_backed_outputs_are_flat(registry_builds):
     """No oracle-backed query may emit array/map/struct/binary top-level
     columns — the external harness's pandas canonicalizer cannot sort
     them, turning a value-correct answer into a red gate row."""
     offenders: dict[str, list[str]] = {}
     for name in ORACLES:
-        fn = QUERIES[name]
-        try:
-            schema = fn(spark, sf_dir).schema
-        except Exception as e:  # surface build failures loudly
+        built = registry_builds[name]
+        if built.error is not None:  # surface build failures loudly
+            e = built.error
             offenders[name] = [f"SCHEMA BUILD FAILED: {type(e).__name__}: {e}"]
             continue
+        schema = built.schema
         bad = [
             f"{f.name}: {f.dataType.simpleString()}"
             for f in schema.fields

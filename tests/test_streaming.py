@@ -251,12 +251,10 @@ def test_stream_ingest_then_compact(spark, sf_dir, tmp_path):
     assert spark.read.parquet(compacted).exceptAll(ingested).count() == 0
 
 
-@pytest.mark.parametrize("indexed", [False, True])
-def test_dedup_ingest_sink_keeps_corpus_clean(spark, tmp_path, indexed):
+def test_dedup_ingest_sink_keeps_corpus_clean(spark, tmp_path):
     """Streaming corpus ingestion: batch 2's exact dup and near dup of
     batch-1 docs must NOT enter the corpus; its novel doc must.
-    indexed=True routes classification through the maintained
-    .dedup_index instead of re-aggregating the corpus per batch."""
+    Classification runs against the sink's maintained .dedup_index."""
     import os
 
     import pyarrow as pa
@@ -304,7 +302,7 @@ def test_dedup_ingest_sink_keeps_corpus_clean(spark, tmp_path, indexed):
     )
     q = (
         stream.writeStream.outputMode("append")
-        .foreachBatch(dedup_ingest_sink(corpus, threshold=0.5, indexed=indexed))
+        .foreachBatch(dedup_ingest_sink(corpus, threshold=0.5))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
